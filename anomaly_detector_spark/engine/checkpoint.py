@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -57,9 +58,17 @@ class CheckpointStore:
             .write.mode("append").parquet(self.metrics_path)
 
     def lineage(self) -> DataFrame:
+        """Completed (run_id, partition_key, check) rows of prior runs.
+
+        Only a missing ``_lineage`` path means "nothing completed yet"; any
+        other read error (a corrupt file, a permission or storage failure)
+        is raised, so resume never silently re-runs everything.
+        """
         try:
             return self.spark.read.parquet(self.lineage_path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
     def pending(self, partitions: DataFrame, check: str,

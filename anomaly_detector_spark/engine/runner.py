@@ -204,8 +204,8 @@ def run_validation(spark: SparkSession, transcripts: DataFrame, registry: DataFr
     sharded = transcripts.withColumn(
         "shard", F.pmod(F.xxhash64("conv_id"), F.lit(drift_shards))
     )
-    # derive_series pins the series_key hash partitioning that both the
-    # grid-index window and the scoring applyInPandas need — one exchange
+    # derive_series pins the partition_key hash partitioning that both the
+    # grid-index window and the scoring mapInArrow need — one exchange
     # serves both stages (score_drift runs with assume_partitioned=True).
     series_parts = spark.sparkContext.defaultParallelism * 4
     series = derive_series(sharded, partition_cols=["shard", "role"], ts_col="ts",
@@ -242,6 +242,6 @@ def run_validation(spark: SparkSession, transcripts: DataFrame, registry: DataFr
     return ValidationResult(
         verdicts=verdicts,
         violations=violations,
-        metrics={"wall_s": time.time() - t0},
+        metrics={"plan_s": time.time() - t0},
         _persisted=persisted,
     )

@@ -11,8 +11,8 @@ Single-series port of the reference's model-selection flow (SURVEY.md §3.1):
                                             util/helpers.py:194-246, util/date_utils.py
 - detect_request (predict equivalent)    <- univariate_anomaly_detection.py:247-322
 
-This is the kernel executed per series group inside Spark's
-``applyInPandas`` and directly by the golden-corpus tests.
+This is the kernel executed per series inside Spark's ``mapInArrow``
+drift scorer and directly by the golden-corpus tests.
 """
 
 from __future__ import annotations

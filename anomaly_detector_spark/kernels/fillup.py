@@ -6,7 +6,7 @@
 - cubic interpolation: scipy ``interp1d(kind='cubic')`` equals a not-a-knot
   cubic spline; implemented here from the standard moment equations.
 
-On Spark the whole process runs per bounded series inside ``applyInPandas``
+On Spark the whole process runs per bounded series inside ``mapInArrow``
 (grid capped at 17280 indices by DEFAULT_MAXIMUM_FILLUP_LENGTH,
 util/fields.py:32), so a single-series port is the correct unit.
 """

@@ -9,8 +9,8 @@ semantics (operators D1-D6 in SURVEY.md §2.11):
 - detection + expected value assembly
                       <- univariate/model/spectral_residual_model.py:13-69
 
-These run inside Arrow-batched ``applyInPandas`` groups on Spark (one group ==
-one bounded series, <= 8640 points by the reference's own validation), so a
+These run inside the Arrow-batched ``mapInArrow`` drift scorer on Spark (one
+call == one bounded series, <= 8640 points by the reference's own validation), so a
 vectorized single-series implementation is exactly the right unit of work.
 """
 

@@ -21,6 +21,9 @@ def test_verdicts_cover_all_checks(validation):
     checks = {r["check"] for r in validation.verdicts.collect()}
     assert {"uniqueness", "monotonic_ts", "role_domain", "tool_domain",
             "null_text", "referential", "turn_gaps", "sr_drift"} <= checks
+    # the runner only builds the plan; its one timing says so
+    assert set(validation.metrics) == {"plan_s"}
+    assert validation.metrics["plan_s"] >= 0
 
 
 def test_violations_ordered_and_typed(validation):
@@ -53,6 +56,20 @@ def test_checkpoint_resume(spark, validation, tmp_path):
     assert pending.count() < parts_for_check.count() or parts_for_check.count() == 0
     store.record_metrics("run1", {"wall_s": 1.0})
     assert spark.read.parquet(os.path.join(str(tmp_path), "_metrics")).count() == 1
+
+
+def test_lineage_missing_dir_is_empty_corrupt_file_raises(spark, tmp_path):
+    store = CheckpointStore(spark, str(tmp_path))
+    # no prior run: an empty lineage with the lineage schema
+    empty = store.lineage()
+    assert empty.count() == 0
+    assert empty.columns == ["run_id", "partition_key", "check", "passed", "completed_at"]
+    # a corrupt file is an error, not "nothing completed"
+    os.makedirs(store.lineage_path)
+    with open(os.path.join(store.lineage_path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        store.lineage()
 
 
 def test_streaming_drift_scores(spark, tmp_path):

@@ -159,20 +159,8 @@ def main() -> None:
         except (json.JSONDecodeError, KeyError):
             pass
 
-    # LADDER_PILOT_PRE_TPS: a pilot reading the LAUNCHER took immediately
-    # before exec'ing this process (r6_campaign's gating pilot).  Reusing it
-    # for the FIRST leg avoids a back-to-back double pilot — each pilot is
-    # ~45s of 16-core work that drains the very burst-credit bucket the
-    # 32-core leg needs, so the redundant second probe was reading its own
-    # footprint as "dirty".
-    pre_tps = os.environ.pop("LADDER_PILOT_PRE_TPS", None)
     for cpus in cores:
-        if pre_tps is not None:
-            tps_f = float(pre_tps)
-            pilot_tps, clean = tps_f, tps_f >= min_tps()
-            pre_tps = None
-        else:
-            pilot_tps, clean = _pilot_stamp() if do_pilot else (None, None)
+        pilot_tps, clean = _pilot_stamp() if do_pilot else (None, None)
         probe = alu_probe()
         leg_convs = convs_per_core * cpus if weak else n_convs
         res = run_one(cpus, leg_convs)
