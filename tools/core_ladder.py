@@ -5,7 +5,7 @@ Runs the IDENTICAL validation job (same input, same code,
 every core count in LADDER_CORES, and derives every N->4N efficiency pair
 the ladder contains.  Attempts merge across invocations (the host throttle
 varies on an hours scale; per-core best-of-merged picks each leg's
-least-throttled observation, same protocol as scaling_run.py).
+least-throttled observation).
 
 Why a ladder instead of one pair: the north rule says "N and 4N executors"
 without fixing N.  On this single-socket box the 16/32-core legs are bound

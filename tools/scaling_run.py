@@ -28,7 +28,6 @@ n_convs = int(sys.argv[2])
 spark = get_spark(app_name=f"scaling-{cpus}", master=f"local[{cpus}]",
                   shuffle_partitions=max(cpus * 2, 16))
 spark.sparkContext.setLogLevel("ERROR")
-import shutil
 profile = os.environ.get("SCALING_PROFILE", "adversarial")
 tag = "" if profile == "adversarial" else f"_{profile}"
 path = f"/tmp/scaling_transcripts_{n_convs}{tag}.parquet"
@@ -36,27 +35,6 @@ if not os.path.isdir(path):
     synth_transcripts(spark, n_convs=n_convs, seed=42, profile=profile
                       ).write.mode("overwrite").parquet(path)
 transcripts = spark.read.parquet(path)
-if os.environ.get("SCALING_BUCKETED", "0") == "1":
-    # Clustered-input deployment series: the production 10^12-turn Iceberg
-    # table would be bucketed by conv_id (sources/bucketed.py), which
-    # removes the conv-keyed window Exchange from the whole constraint
-    # sweep.  The default in-memory catalog forgets table metadata between
-    # JVMs, so each leg re-registers the bucketed table (write is setup,
-    # NOT timed).  repartition(64, conv_id) aligns tasks with buckets
-    # (same murmur3-pmod mapping), giving one file per bucket.
-    from pyspark.sql import functions as F
-    from anomaly_detector_spark.sources.bucketed import write_bucketed
-    tbl = f"scaling_transcripts_b{n_convs}"
-    # a PREVIOUS leg's JVM may have left the warehouse directory behind;
-    # the in-memory catalog has no memory of that table, so saveAsTable
-    # would fail on the existing path — clear it first
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = wh.replace("file:", "")
-    shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
-    write_bucketed(transcripts.repartition(64, F.col("conv_id")), tbl,
-                   ["conv_id"], num_buckets=64,
-                   sort_cols=["conv_id", "turn_idx"], mode="overwrite")
-    transcripts = spark.table(tbl)
 registry = synth_registry(spark, n_convs=n_convs, seed=42)
 n_turns = transcripts.count()
 # two full passes: the first warms JIT, Python workers, and kernel caches;
@@ -138,30 +116,19 @@ def main() -> None:
         # a different N->4N pair (e.g. 2->8) is its own series; never let it
         # clobber the historical n_lo=4 records, whose filenames predate this
         fname = fname.replace(".json", f"_lo{n_lo}.json")
-    if os.environ.get("SCALING_BUCKETED", "0") == "1":
-        fname = fname.replace(".json", "_bucketed.json")
     profile = os.environ.get("SCALING_PROFILE", "adversarial")
     if profile != "adversarial":
         fname = fname.replace(".json", f"_{profile}.json")
     out_path = os.path.join(REPO, "BENCH", fname)
-    # Leg order alternates across invocations (parity of the lo leg's
-    # attempt count in the merge file): under the host's burst-credit
+    # Leg order alternates between rounds: under the host's burst-credit
     # throttle the SECOND leg of a pair starts with a drained credit bucket,
     # so a fixed lo-first order systematically handicaps the hi leg and
     # deflates measured efficiency.  Alternation gives both legs first-slot
-    # samples; per-leg best-of-merged then picks each leg's least-throttled
-    # observation.  SCALING_ORDER=lo_first|hi_first overrides.
+    # samples; per-leg best then picks each leg's least-throttled
+    # observation.  SCALING_ORDER=hi_first starts with the hi leg.
     order = (n_lo, n_hi)
-    mode = os.environ.get("SCALING_ORDER", "auto")
-    if mode == "hi_first":
+    if os.environ.get("SCALING_ORDER", "lo_first") == "hi_first":
         order = (n_hi, n_lo)
-    elif mode == "auto" and os.path.exists(out_path):
-        try:
-            with open(out_path) as f:
-                if len(json.load(f).get("attempts", {}).get(str(n_lo), [])) % 2:
-                    order = (n_hi, n_lo)
-        except (json.JSONDecodeError, KeyError):
-            pass
     for r in range(rounds):
         for cpus in order:
             probe = alu_probe()
@@ -169,13 +136,12 @@ def main() -> None:
             res["probe_sec"] = probe
             attempts[cpus].append(res)
             print(f"round {r} local[{cpus}]:", json.dumps(res), flush=True)
-        order = order[::-1]  # alternate within multi-round invocations too
+        order = order[::-1]
     lo = min(attempts[n_lo], key=lambda a: a["wall_s"])
     hi = min(attempts[n_hi], key=lambda a: a["wall_s"])
     eff = (hi["turns_per_sec"] / lo["turns_per_sec"]) / 4.0
     report = {
         "n_convs": n_convs,
-        "bucketed_input": os.environ.get("SCALING_BUCKETED", "0") == "1",
         "input_profile": os.environ.get("SCALING_PROFILE", "adversarial"),
         "weak_scaling": weak,
         f"local{n_lo}": lo,
@@ -186,33 +152,6 @@ def main() -> None:
         + f"interleaved x{rounds}, per-leg best warm wall",
         "attempts": {str(k): v for k, v in attempts.items()},
     }
-    # SCALING_MERGE=1: fold the attempts of an existing BENCH/scaling.json
-    # (same n_convs + protocol shape) into this campaign before picking the
-    # per-leg best — the host throttle varies on an hours scale, so the
-    # honest best-pair needs samples from several windows.
-    if os.environ.get("SCALING_MERGE", "0") == "1" and os.path.exists(out_path):
-        try:
-            with open(out_path) as f:
-                prev = json.load(f)
-            if (prev.get("n_convs") == n_convs
-                    and prev.get("n_lo", 4) == n_lo
-                    and not prev.get("weak_scaling") and not weak
-                    and prev.get("input_profile", "adversarial")
-                    == os.environ.get("SCALING_PROFILE", "adversarial")
-                    and bool(prev.get("bucketed_input"))
-                    == (os.environ.get("SCALING_BUCKETED", "0") == "1")):
-                for key in (str(n_lo), str(n_hi)):
-                    attempts[int(key)].extend(prev.get("attempts", {}).get(key, []))
-                lo = min(attempts[n_lo], key=lambda a: a["wall_s"])
-                hi = min(attempts[n_hi], key=lambda a: a["wall_s"])
-                eff = (hi["turns_per_sec"] / lo["turns_per_sec"]) / 4.0
-                report[f"local{n_lo}"] = lo
-                report[f"local{n_hi}"] = hi
-                report["scaling_efficiency_N_to_4N"] = round(eff, 3)
-                report["attempts"] = {str(k): v for k, v in attempts.items()}
-                report["protocol"] += ", merged across campaigns"
-        except (json.JSONDecodeError, KeyError):
-            pass
     print(json.dumps(report))
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(out_path, "w") as f:
