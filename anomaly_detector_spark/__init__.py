@@ -15,7 +15,6 @@ Layout
 - ``operators``  : Spark DataFrame operators (stats, constraints, drift,
                    dedup, similarity, text analysis, multimodal plumbing).
 - ``engine``     : check registry, validation runner, checkpoint/lineage.
-- ``streaming``  : Structured Streaming variants of the drift checks.
 """
 
 __version__ = "0.1.0"

@@ -7,9 +7,10 @@ directories here, which the driver environment supports):
 
 - `_lineage`  : one row per (run_id, partition_key, check) that COMPLETED.
 - `_metrics`  : per-run counters and timings.
-- resume      : anti-join the pending partition list against `_lineage` of
-  prior runs — only unfinished partitions are re-validated (SURVEY.md §4,
-  checkpoint/resume paragraph).
+- resume      : the `sr_drift` partition keys in `_lineage` of prior runs go
+  to `run_validation(completed_drift_partitions=...)`, which anti-joins them
+  away before scoring — only unfinished partitions are re-validated
+  (SURVEY.md §4, checkpoint/resume paragraph).
 """
 
 from __future__ import annotations
@@ -70,18 +71,3 @@ class CheckpointStore:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-
-    def pending(self, partitions: DataFrame, check: str,
-                key_col: str = "partition_key") -> DataFrame:
-        """Partitions not yet completed for ``check`` (any prior run).
-
-        Anti-join on the distinct completed set — the lineage side is
-        aggregated first so the join input is one row per partition.
-        """
-        done = (
-            self.lineage()
-            .filter(F.col("check") == check)
-            .select(F.col("partition_key").alias(key_col))
-            .distinct()
-        )
-        return partitions.join(done, key_col, "left_anti")

@@ -1,4 +1,4 @@
-"""Validation runner — orchestrates stats + constraints + drift into
+"""Validation runner — orchestrates constraints + drift into
 per-partition verdicts, violation rows, and metrics/lineage tables.
 
 Mirrors the reference's request lifecycle (validate -> detect -> verdict,
@@ -212,7 +212,8 @@ def run_validation(spark: SparkSession, transcripts: DataFrame, registry: DataFr
                            bucket=drift_bucket, num_partitions=series_parts)
     if completed_drift_partitions is not None:
         # resume: drop series whose partition already completed in a prior
-        # run (CheckpointStore.pending) BEFORE the expensive scoring pass —
+        # run (the sr_drift keys of CheckpointStore.lineage(), as
+        # submit_job --resume reads them) BEFORE the expensive scoring pass —
         # an anti-join on the series key (partition_key/metric), broadcast
         # when small.
         done = completed_drift_partitions.select(

@@ -147,8 +147,8 @@ def _tail_test_loop(sorted_values, sorted_index, max_outliers: int, thresholds,
     Dispatch: the full-scan case (``last_index == -1`` — every batch scoring
     path) runs :func:`_tail_test_full`, which evaluates the same per-k tests
     with the median/deviation/threshold arithmetic batched (bit-exact, see
-    its docstring); the streaming latest-point case keeps the sequential
-    early-break loop in :func:`_tail_test_loop_seq`."""
+    its docstring); the latest-mode (``last_index != -1``) case keeps the
+    sequential early-break loop in :func:`_tail_test_loop_seq`."""
     if last_index == -1:
         return _tail_test_full(sorted_values, sorted_index, max_outliers,
                                thresholds, upper_tail)
@@ -158,8 +158,9 @@ def _tail_test_loop(sorted_values, sorted_index, max_outliers: int, thresholds,
 
 def _tail_test_loop_seq(sorted_values, sorted_index, max_outliers: int, thresholds,
                         upper_tail: bool, last_index: int) -> list:
-    """Sequential reference form of the tail loop (early-break streaming path;
-    also the A/B oracle for ``_tail_test_full``)."""
+    """Sequential reference form of the tail loop (early-break latest-mode
+    (``last_index != -1``) case; also the A/B oracle for
+    ``_tail_test_full``)."""
     length = len(sorted_values)
     values = np.asarray(sorted_values, dtype=_f32)
     reverse_value = values[::-1].copy()

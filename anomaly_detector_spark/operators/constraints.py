@@ -158,16 +158,6 @@ def null_violations(df: DataFrame, column: str,
     return df.filter(F.col(column).isNull()).select(*keys)
 
 
-def value_bound_violations(df: DataFrame, column: str, lower: float, upper: float,
-                           keys: tuple[str, str] = ("conv_id", "turn_idx")) -> DataFrame:
-    """Rows with a numeric value outside [lower, upper] or NaN (:66-70)."""
-    col = F.col(column).cast("double")
-    return (
-        df.filter(F.isnan(col) | (col < lower) | (col > upper))
-        .select(*keys, F.col(column).alias("bad_value"))
-    )
-
-
 def turn_gap_violations(df: DataFrame, key: str = "conv_id", order_col: str = "turn_idx") -> DataFrame:
     """Conversations whose turn_idx sequence has gaps or doesn't start at 0.
 

@@ -26,13 +26,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        out,
-        (_dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))),
-    )
-
-
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id") -> DataFrame:
@@ -70,26 +63,16 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-def lsh_bucket_ids(df: DataFrame, vec_col: str, dim: int, n_planes: int = 12,
-                   n_tables: int = 4, seed: int = 11) -> DataFrame:
-    """Attach ``n_tables`` random-hyperplane bucket signatures per vector.
-
-    Computed in one Arrow-batched pandas UDF (numpy matmul against a
-    per-process-cached (tables*planes, dim) hyperplane matrix) rather than
-    inlined literal expressions: the expression form embeds
-    dim*n_planes*n_tables literals into the plan, which explodes
-    codegen/plan size at real embedding dims (768+).  Hyperplanes are
-    regenerated deterministically from the seed inside the worker, so the
-    plan carries no vector constants at all.
-    """
-    _buckets = _bucket_array_udf(dim, n_planes, n_tables, seed)
-    out = df.withColumn("_buckets", _buckets(F.col(vec_col)))
-    for t in range(n_tables):
-        out = out.withColumn(f"bucket_{t}", F.col("_buckets")[t])
-    return out.drop("_buckets")
-
-
 def _bucket_array_udf(dim: int, n_planes: int, n_tables: int, seed: int):
+    """``n_tables`` random-hyperplane bucket signatures per vector.
+
+    One Arrow-batched pandas UDF (numpy matmul against a per-process-cached
+    (tables*planes, dim) hyperplane matrix) rather than inlined literal
+    expressions: the expression form embeds dim*n_planes*n_tables literals
+    into the plan, which explodes codegen/plan size at real embedding dims
+    (768+).  Hyperplanes are regenerated deterministically from the seed
+    inside the worker, so the plan carries no vector constants at all.
+    """
     @F.pandas_udf("array<long>")
     def _buckets(vecs: pd.Series) -> pd.Series:
         import numpy as np

@@ -1,4 +1,4 @@
-"""Engine-level tests: validation runner, checkpoint/resume, streaming drift."""
+"""Engine-level tests: validation runner, checkpoint/resume."""
 
 import os
 
@@ -11,9 +11,15 @@ from anomaly_detector_spark.engine.runner import run_validation
 
 
 @pytest.fixture(scope="module")
-def validation(spark):
+def inputs(spark):
     transcripts = synth_transcripts(spark, n_convs=150, seed=42).cache()
     registry = synth_registry(spark, n_convs=150, seed=42).cache()
+    return transcripts, registry
+
+
+@pytest.fixture(scope="module")
+def validation(spark, inputs):
+    transcripts, registry = inputs
     return run_validation(spark, transcripts, registry, cache_input=True)
 
 
@@ -44,17 +50,38 @@ def test_planted_checks_fail_clean_checks_pass(validation):
     assert verd["turn_gaps"] is True        # generator emits contiguous turns
 
 
-def test_checkpoint_resume(spark, validation, tmp_path):
+def test_checkpoint_resume(spark, inputs, validation, tmp_path):
+    """A resumed run re-scores only the drift partitions no prior run
+    recorded.  The completed set is the lineage read ``submit_job --resume``
+    passes as ``completed_drift_partitions``; constraint checks are always
+    re-verified."""
+    transcripts, registry = inputs
     store = CheckpointStore(spark, str(tmp_path))
-    verdicts = validation.verdicts.cache()
-    store.record("run1", verdicts.limit(3))
-    all_parts = verdicts.select("partition_key", "check").distinct()
-    done_checks = [r["check"] for r in verdicts.limit(3).collect()]
-    first_check = done_checks[0]
-    parts_for_check = verdicts.filter(F.col("check") == first_check).select("partition_key")
-    pending = store.pending(parts_for_check, first_check)
-    assert pending.count() < parts_for_check.count() or parts_for_check.count() == 0
-    store.record_metrics("run1", {"wall_s": 1.0})
+    full = validation.verdicts.collect()
+    drift_keys = sorted(r["partition_key"] for r in full if r["check"] == "sr_drift")
+    assert len(drift_keys) >= 2
+    done, todo = drift_keys[::2], set(drift_keys[1::2])
+    store.record("run_9", validation.verdicts.filter(
+        (F.col("check") == "sr_drift") & F.col("partition_key").isin(done)))
+    completed = (
+        store.lineage()
+        .filter(F.col("check") == "sr_drift")
+        .select("partition_key")
+        .distinct()
+    )
+    resumed = run_validation(spark, transcripts, registry,
+                             completed_drift_partitions=completed)
+    rows = resumed.verdicts.collect()
+    resumed.release()
+    assert {r["partition_key"] for r in rows if r["check"] == "sr_drift"} == todo
+
+    def constraint_rows(verdicts):
+        return sorted((r["check"], r["partition_key"], r["passed"])
+                      for r in verdicts if r["check"] != "sr_drift")
+
+    assert len(constraint_rows(rows)) == 7
+    assert constraint_rows(rows) == constraint_rows(full)
+    store.record_metrics("run_9", {"wall_s": 1.0})
     assert spark.read.parquet(os.path.join(str(tmp_path), "_metrics")).count() == 1
 
 
@@ -70,146 +97,6 @@ def test_lineage_missing_dir_is_empty_corrupt_file_raises(spark, tmp_path):
         f.write(b"not a parquet file")
     with pytest.raises(Exception, match="not a Parquet file"):
         store.lineage()
-
-
-def test_streaming_drift_scores(spark, tmp_path):
-    """Exercise the stateful latest-mode scorer through a memory-rate stream
-    substitute: run the same applyInPandasWithState function on a static
-    micro-batch via the batch API equivalence."""
-    import pandas as pd
-
-    from anomaly_detector_spark.streaming.drift_stream import STREAM_SCORE_SCHEMA, _score_latest
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    # one row per EVENT; the state function counts rows per bucket.  10
-    # events/hour for 29 hours, a 100-event spike at hour 29, then one
-    # trailing hour so the spike bucket closes and gets scored.
-    buckets = pd.date_range("2025-01-01", periods=31, freq="h")
-    rows = []
-    for i, b in enumerate(buckets):
-        n = 100 if i == 29 else 10
-        rows.extend({"series_key": "a", "bucket_ts": b} for _ in range(n))
-    pdf = pd.DataFrame(rows)
-    state = FakeState()
-    out = list(_score_latest(("a",), iter([pdf]), state))[0]
-    assert len(out) == 30  # newest bucket stays open in state
-    assert out.iloc[29]["value"] == 100.0
-    assert bool(out.iloc[29]["is_anomaly"])  # planted spike flagged
-    assert not out.iloc[:29]["is_anomaly"].any()
-    assert out["n_state_points"].iloc[-1] == 30
-    # second batch: a later bucket closes the held-open one
-    pdf2 = pd.DataFrame([{"series_key": "a", "bucket_ts": buckets[-1] + pd.Timedelta(hours=1)}])
-    out2 = list(_score_latest(("a",), iter([pdf2]), state))[0]
-    assert len(out2) == 1 and out2.iloc[0]["value"] == 10.0
-
-
-def test_streaming_lateness_tolerance(spark):
-    """Late events for a bucket still inside the lateness horizon are counted
-    even when they arrive in a LATER micro-batch; events past the horizon
-    (bucket already closed) are dropped."""
-    import pandas as pd
-
-    from anomaly_detector_spark.streaming.drift_stream import _score_latest
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    buckets = pd.date_range("2025-01-01", periods=20, freq="h")
-    lateness = 2 * 3600  # hold buckets open for 2 hours past max-seen
-
-    # batch 1: 5 events in each of hours 0..19
-    rows = [{"series_key": "a", "bucket_ts": b} for b in buckets for _ in range(5)]
-    state = FakeState()
-    out1 = list(_score_latest(("a",), iter([pd.DataFrame(rows)]), state, lateness))[0]
-    # horizon = h19 - 2h -> hours 0..16 close; 17,18,19 stay open
-    assert len(out1) == 17
-    values, open_ts, open_counts, closed_through = state.get
-    assert len(open_ts) == 3
-    assert closed_through == int(buckets[16].value // 1_000_000_000)
-
-    # batch 2: 3 LATE events for still-open hour 18, 4 events for closed
-    # hour 10 (dropped), and 5 events for new hour 21 (closes 17 and 18)
-    late = (
-        [{"series_key": "a", "bucket_ts": buckets[18]} for _ in range(3)]
-        + [{"series_key": "a", "bucket_ts": buckets[10]} for _ in range(4)]
-        + [{"series_key": "a", "bucket_ts": buckets[19] + pd.Timedelta(hours=2)} for _ in range(5)]
-    )
-    out2 = list(_score_latest(("a",), iter([pd.DataFrame(late)]), state, lateness))[0]
-    closed = {r["bucket_ts"].hour: r["value"] for _, r in out2.iterrows()}
-    assert closed == {17: 5.0, 18: 8.0}  # late events absorbed into h18; h10 dropped
-
-
-def test_streaming_drift_end_to_end(spark, tmp_path):
-    """Drive the REAL Structured Streaming path: file source -> watermarked
-    windowed_series agg -> applyInPandasWithState scoring -> memory sink.
-    Two micro-batches (maxFilesPerTrigger=1) so the watermark advances and
-    append-mode windows close; the planted mid-stream spike must be flagged
-    once enough state has accumulated."""
-    import pandas as pd
-
-    from anomaly_detector_spark.streaming.drift_stream import bucketed_events, score_stream
-
-    t0 = pd.Timestamp("2025-01-01")
-    rows = []
-    for h in range(34):
-        n = 50 if h == 25 else 5  # 10x rate spike at hour 25
-        for i in range(n):
-            rows.append(("click", t0 + pd.Timedelta(hours=h, seconds=i)))
-    pdf = pd.DataFrame(rows, columns=["event_type", "ts"])
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    # two files -> two micro-batches; second batch moves the watermark past
-    # the first batch's windows so they emit in append mode
-    spark.createDataFrame(pdf[pdf.ts < t0 + pd.Timedelta(hours=30)]) \
-        .coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(pdf[pdf.ts >= t0 + pd.Timedelta(hours=30)]) \
-        .coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    events = bucketed_events(stream, partition_cols=["event_type"], ts_col="ts",
-                             bucket="1 hour")
-    scored = score_stream(events)
-    q = (
-        scored.writeStream.format("memory").queryName("drift_stream_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = {r["bucket_ts"].hour + (r["bucket_ts"].day - 1) * 24: r
-           for r in spark.sql("SELECT * FROM drift_stream_test").collect()}
-    assert len(out) >= 13  # windows up to the watermark emitted
-    assert out[25]["value"] == 50.0
-    assert bool(out[25]["is_anomaly"])  # planted spike flagged by latest-mode DT
-    assert not any(bool(out[h]["is_anomaly"]) for h in out if h not in (25,))
-    assert out[25]["n_state_points"] == 26  # trailing state buffer grew per bucket
 
 
 def test_attach_turn_text_exact_per_turn_text(spark):

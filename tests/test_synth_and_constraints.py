@@ -145,6 +145,25 @@ def test_sequence_violations_fused_matches_separate_ops(spark):
     assert count_exchanges(sequence_violations(df)) == 1
 
 
+def test_bucketed_fused_constraint_sweep_no_exchange(spark):
+    """The full fused constraint pass (monotonic + gaps + uniqueness from one
+    window) plans with ZERO exchanges over a table bucketed by conv_id and
+    sorted by (conv_id, turn_idx) — the clustered-input deployment shape of
+    the transcript table."""
+    from conftest import count_exchanges
+
+    synth_transcripts(spark, n_convs=200, seed=42).write \
+        .bucketBy(8, "conv_id").sortBy("conv_id", "turn_idx") \
+        .saveAsTable("t_bucketed")
+    try:
+        seq = constraints.sequence_violations(spark.table("t_bucketed"),
+                                              include_duplicates=True)
+        assert seq.count() >= 0
+        assert count_exchanges(seq) == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_bucketed")
+
+
 def test_window_uniqueness_equals_salted_aggregation(spark):
     """The fused window form of the duplicate-key check (adjacent equal
     turn_idx in the conv-sorted window, re-aggregated) must equal the

@@ -4,11 +4,15 @@ Every ``tools/*.py`` script plus ``bench.py`` and ``bench_extra.py`` must
 byte-compile, and every import of a sibling script (``core_ladder`` ->
 ``scaling_run``/``spark_pilot``, ``scaling_run`` -> ``bench``, ...) must
 name a script that exists and names it defines, so deleting or renaming a
-script cannot leave a dangling import behind.
+script cannot leave a dangling import behind.  Any other absolute import
+must be the standard library or one of the third-party packages the
+scripts use (``THIRD_PARTY``), so an import of a wholly deleted script
+fails too; nothing has to be installed for the check.
 """
 
 import ast
 import os
+import sys
 
 import pytest
 
@@ -21,6 +25,7 @@ SCRIPTS = sorted(
 # the scripts put their own directory, the repo root and (bench.py) tools/
 # on sys.path before importing siblings
 SEARCH_DIRS = (TOOLS, REPO)
+THIRD_PARTY = {"pyspark", "numpy", "pandas", "duckdb"}
 
 
 def _parse(path):
@@ -90,3 +95,13 @@ def test_sibling_imports_resolve():
     assert {("core_ladder", "scaling_run"), ("core_ladder", "spark_pilot"),
             ("scaling_run", "bench"), ("bench", "spark_pilot"),
             ("sf1_bench", "spark_pilot"), ("delta_sweep", "xfail_inverse")} <= edges
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: os.path.relpath(p, REPO))
+def test_absolute_imports_exist(path):
+    unknown = {mod for mod, _ in _imports(_parse(path))
+               if _local_file(mod, path) is None
+               and mod not in sys.stdlib_module_names and mod not in THIRD_PARTY}
+    assert not unknown, (
+        f"{os.path.relpath(path, REPO)} imports {sorted(unknown)}: no file in the "
+        "repository, not stdlib, not a known third-party package")

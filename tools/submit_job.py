@@ -16,7 +16,9 @@ Local smoke run (no cluster):
 
 Outputs under --output:
     verdicts/run_id=*/    per-partition pass/fail + scores, appended per run
-                          (current view = latest run_id per partition+check)
+                          (current verdict per partition+check = the one
+                          from the run with the greatest _lineage
+                          completed_at, not the greatest run_id string)
     violations/run_id=*/  stable-ordered violation rows, appended per run
     _lineage/             per-(run, partition, check) completion rows,
                           written only after the run's verdicts landed
@@ -106,7 +108,9 @@ def main() -> None:
     # --resume run never deletes prior runs' drift verdicts (overwrite of the
     # shared dir would), and a crashed run leaves no lineage row — the next
     # --resume simply re-scores its partitions.  The current verdict per
-    # partition is the latest run_id (see _latest_verdicts below).
+    # (partition, check) is the one from the run with the greatest
+    # _lineage completed_at; run_id strings do not order runs (run_10 <
+    # run_9).
     verdicts_path = os.path.join(args.output, "verdicts")
     violations_path = os.path.join(args.output, "violations")
     result.verdicts.withColumn("run_id", F.lit(args.run_id)) \
@@ -126,18 +130,9 @@ def main() -> None:
     this_run = spark.read.parquet(verdicts_path).filter(F.col("run_id") == args.run_id)
     store.record(args.run_id, this_run)
 
-    from pyspark.sql.window import Window
-
-    all_verdicts = spark.read.parquet(verdicts_path)
-    latest = (
-        all_verdicts.withColumn(
-            "_rn", F.row_number().over(
-                Window.partitionBy("partition_key", "check").orderBy(F.desc("run_id"))
-            )
-        ).filter(F.col("_rn") == 1).drop("_rn")
-    )
     n_verdicts = this_run.count()
-    n_current = latest.count()
+    n_current = spark.read.parquet(verdicts_path) \
+        .select("partition_key", "check").distinct().count()
     n_violations = spark.read.parquet(violations_path) \
         .filter(F.col("run_id") == args.run_id).count()
     store.record_metrics(args.run_id, {
